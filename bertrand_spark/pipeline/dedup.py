@@ -742,12 +742,22 @@ def near_dup_pairs_minhash(
     verifying every collision, require ``m ≥ min_band_matches(threshold,
     r, b, miss_tolerance)`` matching bands — the binomial consensus floor
     that misses an exactly-at-threshold pair with probability ≤
-    ``miss_tolerance`` and cuts ~96% of the verification workload.
+    ``miss_tolerance`` and cuts ~96% of the verification workload.  The
+    floor never drops below one band, so the banding geometry itself
+    bounds recall: an at-threshold pair shares no band with probability
+    (1 − t^r)^b.  At the defaults (k=32 in 8 bands of r=4, t=0.7) that is
+    ≈ 0.11, far above the 1e-4 tolerance; a ``UserWarning`` says so
+    whenever the geometry cannot meet ``miss_tolerance`` (x02's k=770 in
+    154 bands at t=0.6 misses with ≈ 4e-6 and does not warn).
 
-    ``persist``: cache the per-doc prep table for the run; the cache
-    entry lives until the caller unpersists or ``spark.catalog
-    .clearCache()`` — pass ``persist=False`` in long-lived sessions that
-    call this repeatedly on large corpora.
+    ``persist``: kept for compatibility; it no longer changes what runs.
+    Every call caches the per-doc prep table (the fused MinHash kernel
+    runs once per document), materializes the verified pairs with
+    ``localCheckpoint``, and releases the prep (and the candidate cache,
+    when one was needed) before returning.  The result's plan is a scan
+    of the materialized pairs, so any number of later consumers never
+    re-run the kernel; its blocks are freed when the frame is garbage
+    collected.
 
     ``max_bucket``: skip (band, bucket) groups with more than this many
     members before the self-join.  A bucket of d docs emits d²/2 pair
@@ -758,6 +768,17 @@ def near_dup_pairs_minhash(
     same-bucket pair can be missed; ``None`` (default) keeps recall
     exact.
     """
+    rows_per_band = k // num_bands
+    miss_rate = (1.0 - threshold ** rows_per_band) ** num_bands
+    if miss_rate > miss_tolerance:
+        import warnings
+
+        warnings.warn(
+            f"k={k} in {num_bands} bands misses a pair at jaccard="
+            f"{threshold} with probability {miss_rate:.2g} > "
+            f"miss_tolerance={miss_tolerance}: add bands to meet it",
+            stacklevel=2,
+        )
     # ONE fused Arrow pass per document produces both the signature (for
     # banding) and the 64-bit shingle-hash set (for verification); the
     # result is persisted so banding, both self-join sides, and both
@@ -766,7 +787,7 @@ def near_dup_pairs_minhash(
     # hash sets equals Jaccard over the string shingle sets.
     kernel = minhash_banded_vectorized(k, num_bands, shingle_n)
     prep, n_docs, g_bytes = _minhash_prep(
-        df, id_col, text_col, kernel, id_col, persist
+        df, id_col, text_col, kernel, id_col, persist=True
     )
 
     bands = prep.select(
@@ -783,13 +804,13 @@ def near_dup_pairs_minhash(
     a = bands.withColumnRenamed(id_col, "id_a")
     bn = bands.withColumnRenamed(id_col, "id_b")
     consensus = min_band_matches(
-        threshold, k // num_bands, num_bands, miss_tolerance
+        threshold, rows_per_band, num_bands, miss_tolerance
     )
     # broadcast the build side only while the band table (n_docs ×
     # num_bands × 24 B tuples) is broadcast-sized — skips AQE's
     # materialize-both-sides shuffle stage; at corpus scale the hint is
     # withheld and the self-join shuffles on (band, bucket) as usual
-    if n_docs is not None and n_docs * num_bands * 24 < 100 << 20:
+    if n_docs * num_bands * 24 < 100 << 20:
         bn = F.broadcast(bn)
     cand = (
         a.join(bn, ["band", "bucket"], "inner")
@@ -819,17 +840,25 @@ def near_dup_pairs_minhash(
     # submitted concurrently on the broadcast thread pool) — materialize
     # BEFORE fan-out or each build races the unpopulated cache and
     # recomputes the band self-join.
-    direct = g_bytes is not None and 2 * g_bytes < _DIRECT_BROADCAST_BYTES
-    if persist and not direct:
-        cand = cand.persist()
-        cand.count()
-    return _verify_candidates(
-        cand,
-        prep.withColumnRenamed(id_col, "id_a"),
-        prep.withColumnRenamed(id_col, "id_b"),
-        "id_a", "id_b", threshold,
-        direct=direct,
-    )
+    direct = 2 * g_bytes < _DIRECT_BROADCAST_BYTES
+    # materialize the verified pairs while the caches are live, then
+    # release them: the result owns no cache and no Python-eval node, so
+    # every later consumer (collect, connected components, drop lists)
+    # reads the stored pairs instead of re-running the kernel
+    try:
+        if not direct:
+            cand = cand.persist()
+            cand.count()
+        return _verify_candidates(
+            cand,
+            prep.withColumnRenamed(id_col, "id_a"),
+            prep.withColumnRenamed(id_col, "id_b"),
+            "id_a", "id_b", threshold,
+            direct=direct,
+        ).localCheckpoint()
+    finally:
+        prep.unpersist()
+        cand.unpersist()
 
 
 def fuzzy_join_minhash(

@@ -144,7 +144,7 @@ def connected_components(
             except Exception:
                 pass  # best-effort: leaked blocks only cost memory
 
-    def _ckpt(df, prev_ids, track=True):
+    def _ckpt(df, prev_ids):
         """localCheckpoint df; free the superseded round's blocks (safe:
         nothing references them once the new checkpoint is materialized).
 
@@ -155,19 +155,19 @@ def connected_components(
         persisted something, the diff is ambiguous and we free nothing
         (a bounded leak beats unpersisting someone else's blocks).
         """
-        before = _persisted_ids() if track else set()
+        before = _persisted_ids()
         out = df.localCheckpoint()
-        mine = list(_persisted_ids() - before) if track else []
+        mine = list(_persisted_ids() - before)
         if len(mine) != 1:
             mine = []
         _free(prev_ids)
         return out, mine
 
-    # round 0 is the first action on the input lineage: upstream caches
-    # (e.g. a near-dup pipeline's prep/cand persists) materialize inside
-    # it, so ownership of new RDD ids is unknowable — don't track (the
-    # one initial checkpoint leaks; every later round is cleaned)
-    canon, ckpt_ids = _ckpt(_canonical(edges, src, dst), [], track=False)
+    # round 0 is the first action on the input lineage: when upstream
+    # caches materialize inside it the diff holds several new ids and
+    # _ckpt claims none (a bounded leak); materialized input (e.g.
+    # near_dup_pairs_minhash's checkpointed pairs) leaves exactly one
+    canon, ckpt_ids = _ckpt(_canonical(edges, src, dst), [])
 
     def _fingerprint(e: DataFrame):
         # bit_xor, not sum: order-insensitive AND overflow-free under ANSI

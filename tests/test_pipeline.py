@@ -13,6 +13,10 @@ def docs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
+def _persisted_rdd_ids(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 @pytest.fixture(scope="module")
 def embs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -95,6 +99,70 @@ class TestDedup:
         ids = {(r["id_a"], r["id_b"]) for r in pairs}
         assert (1, 2) in ids
         assert all(3 not in p for p in ids)
+
+    @pytest.mark.parametrize("persist", [True, False])
+    @pytest.mark.parametrize("semi_join", [False, True], ids=["direct", "semi"])
+    def test_minhash_pairs_materialized_once(
+        self, spark, docs, persist, semi_join, monkeypatch
+    ):
+        """The kernel runs once per call whatever ``persist`` says: the
+        result is a scan of materialized pairs (no Python-eval node left
+        to re-run), the call leaves exactly one new persisted RDD — the
+        one backing the result — and the pairs equal the exact
+        shingle-Jaccard pairs."""
+        if semi_join:  # a zero budget forces the persisted-candidate path
+            monkeypatch.setattr(D, "_DIRECT_BROADCAST_BYTES", 0)
+        before = _persisted_rdd_ids(spark)
+        pairs = D.near_dup_pairs_minhash(
+            docs, threshold=0.6, k=770, num_bands=154, persist=persist
+        )
+        new_ids = _persisted_rdd_ids(spark) - before
+        qe = pairs._jdf.queryExecution()
+        assert len(new_ids) == 1 and qe.analyzed().nodeName() == "LogicalRDD"
+        assert new_ids == {qe.analyzed().rdd().id()}
+        got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
+        plan = qe.executedPlan().toString()
+        for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
+            assert node not in plan
+        grams = sorted(
+            (r["doc_id"], set(r["g"]))
+            for r in docs.select(
+                "doc_id", T.char_ngrams(F.col("text"), 5).alias("g")
+            ).collect()
+        )
+        exact = {
+            (ia, ib)
+            for i, (ia, ga) in enumerate(grams)
+            for ib, gb in grams[i + 1:]
+            if len(ga & gb) / len(ga | gb) >= 0.6
+        }
+        assert got == exact and got
+
+    def test_dedup_keep_canonical_frees_round0_checkpoint(self, spark, docs):
+        from bertrand_spark.pipeline.graph import dedup_keep_canonical
+
+        pairs = D.near_dup_pairs_minhash(
+            docs, threshold=0.6, k=770, num_bands=154
+        )
+        before = _persisted_rdd_ids(spark)
+        dedup_keep_canonical(docs, pairs).collect()
+        assert _persisted_rdd_ids(spark) - before == set()
+
+    def test_minhash_warns_when_bands_miss_tolerance(self, spark):
+        import warnings
+
+        df = spark.createDataFrame(
+            [(1, "the quick brown fox jumps"), (2, "the quick brown fox leaps")],
+            ["doc_id", "text"],
+        )
+        # defaults k=32 in 8 bands at t=0.7: (1 - 0.7^4)^8 ≈ 0.11 > 1e-4
+        with pytest.warns(UserWarning, match="probability 0.11 > miss_tolerance"):
+            D.near_dup_pairs_minhash(df)
+        # x02's geometry: (1 - 0.6^5)^154 ≈ 4e-6 meets the tolerance
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            D.near_dup_pairs_minhash(df, threshold=0.6, k=770, num_bands=154)
+        assert not [w for w in caught if "miss_tolerance" in str(w.message)]
 
     def test_simhash(self, spark):
         base = "spark makes big data processing simple and fast for everyone today"
