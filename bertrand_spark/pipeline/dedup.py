@@ -9,13 +9,17 @@ Scale design notes (the whole point of these ops):
 
 * Exact dedup: hash-groupBy on a 64-bit fingerprint — one shuffle on a
   uniformly-distributed key; no skew by construction.
-* MinHash: signatures are computed *per row* with native array expressions
-  (``transform`` + ``array_min`` over xxhash64) — no explode, no shuffle, no
-  Python.  LSH banding then shuffles only (band_id, band_hash) pairs —
-  ``num_bands × n_rows`` small tuples, not the documents themselves.
-* Candidate pairs come from an equi-join on band buckets (hash join on a
-  high-cardinality key).  Verification (exact Jaccard on shingle sets) runs
-  only on candidates — the classic LSH cost profile.
+* MinHash: ONE fused Arrow kernel pass per document
+  (:func:`minhash_banded_vectorized`, numpy) emits the document's LSH band
+  buckets and its 64-bit shingle-hash set; the prep table is cached so the
+  kernel runs once per call.  Banding then shuffles only (id, band,
+  bucket) tuples — ``num_bands × n_rows`` small rows, not the documents.
+* Candidate pairs come from an equi-join on (band, bucket) plus a
+  band-consensus count, and exact Jaccard over the hash sets verifies only
+  the candidates — the classic LSH cost profile.  The three MinHash entry
+  points share this core and return MATERIALIZED pairs: the verified pairs
+  are ``localCheckpoint``ed, every cache the call made is released, and
+  the result's plan is a scan with no Python node left to re-run.
 * SimHash: explode-tokens → 64 per-bit partial sums → map-side combinable
   groupBy; near-dup = Hamming distance via ``bit_count(xor)``, native.
 """
@@ -27,14 +31,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.reader import spread as _spread
-from .text import char_ngrams, fingerprint, tokenize, word_ngrams
+from .text import fingerprint, tokenize, word_ngrams
 
 __all__ = [
     "exact_dedup", "exact_dedup_incremental", "exact_dup_groups",
     "write_fingerprint_store", "exact_dedup_incremental_store",
     "compact_fingerprint_store",
-    "minhash_signature", "minhash_bands", "lsh_candidate_pairs",
-    "min_band_matches", "jaccard_shingles", "near_dup_pairs_minhash",
+    "min_band_matches", "near_dup_pairs_minhash", "free_checkpoint",
     "simhash64", "simhash64_vectorized", "near_dup_pairs_simhash",
     "ngram_jaccard_pairs", "word_gram_hashes_vectorized", "cosine_near_dup_pairs",
     "fuzzy_join_minhash", "fuzzy_join_band_store", "near_dup",
@@ -340,157 +343,20 @@ def exact_dup_groups(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 # --- MinHash + LSH ---------------------------------------------------------
-def shingle_hashes(text: Column, shingle_n: int = 5) -> Column:
-    """Distinct 31-bit shingle hashes for a text column (array<bigint>)."""
-    grams = char_ngrams(text, shingle_n)
-    return F.array_distinct(
-        F.transform(grams, lambda g: F.pmod(F.xxhash64(g), F.lit((1 << 31) - 1)))
-    )
-
-
-def minhash_from_hashes(hashes: Column, k: int = 32, seed: int = 42) -> Column:
-    """k-permutation MinHash signature over a pre-computed hash array.
-
-    Each permutation j: ``min over shingles of (a_j * h + b_j) mod p`` with
-    p = 2^61-1 (Broder's scheme).  Implemented as ONE streaming
-    ``aggregate`` over the hash array with a k-wide running-minimum
-    accumulator (``zip_with(acc, perms(h), least)``): the hash array — and
-    therefore the whole shingle pipeline feeding it — is evaluated exactly
-    once per row no matter what Catalyst inlines, and the expression tree
-    is O(1) in k.  The round-1 version emitted k independent
-    ``array_min(transform(<whole shingle pipeline>))`` copies, which blew
-    codegen into interpreted fallback (~9 min for 500 docs).
-    """
-    coeffs = _perm_coeffs(k, seed)
-    A = F.array(*[F.lit(a) for a, _ in coeffs])
-    B = F.array(*[F.lit(b) for _, b in coeffs])
-    init = F.array_repeat(F.lit(_MERSENNE), k)
-    idx = F.sequence(F.lit(1), F.lit(k))
-
-    def merge(acc: Column, h: Column) -> Column:
-        perms = F.transform(
-            idx,
-            lambda j: F.pmod(
-                h * F.element_at(A, j.cast("int")) + F.element_at(B, j.cast("int")),
-                F.lit(_MERSENNE),
-            ),
-        )
-        return F.zip_with(acc, perms, lambda x, y: F.least(x, y))
-
-    return F.aggregate(hashes, init, merge)
-
-
-def minhash_signature(
-    text: Column, k: int = 32, shingle_n: int = 5, seed: int = 42
-) -> Column:
-    """k-permutation MinHash signature (array<bigint>), fully native.
-
-    Column-level convenience; DataFrame-level callers should materialize
-    ``shingle_hashes`` in a separate projection first (see
-    ``lsh_candidate_pairs``) so Catalyst's CollapseProject cost guard keeps
-    the shingle pipeline evaluated once.
-    """
-    return minhash_from_hashes(shingle_hashes(text, shingle_n), k, seed)
-
-
-def minhash_signature_vectorized(
-    k: int = 192, shingle_n: int = 5, seed: int = 42
-) -> Column:
-    """Arrow-batched numpy MinHash signature kernel (the scale path).
-
-    Spark's higher-order functions (``transform``/``aggregate``) are
-    CodegenFallback — evaluated interpreted, row at a time — which makes
-    the native signature ~2.4 ms/doc.  This kernel moves the per-document
-    loop to numpy: one (k × |shingles|) uint64 broadcast multiply-mod per
-    document, ~100× the HOF throughput, with only the text crossing the
-    Arrow boundary.  The hash inside (crc32) need not match the JVM-side
-    verification hash: the LSH recall guarantee only requires the
-    signature to be a true MinHash over the SAME shingle sets, and the
-    shingle normalization below mirrors ``text.char_ngrams`` exactly.
-
-    Returns a Column factory: call with the text column.
-    """
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    coeffs = _perm_coeffs(k, seed)
-
-    @pandas_udf("array<bigint>")
-    def kernel(texts: pd.Series) -> pd.Series:
-        A = np.array([a for a, _ in coeffs], dtype=np.uint64)[:, None]
-        B = np.array([b for _, b in coeffs], dtype=np.uint64)[:, None]
-        out = []
-        for t in texts:
-            if t is None:
-                out.append(None)
-                continue
-            sig = _np_minhash_sig(_np_shingle_hashes(t, shingle_n), A, B)
-            out.append(sig.view(np.int64))
-        return pd.Series(out)
-
-    # non-deterministic: stops the optimizer duplicating the kernel below
-    # a repartition to evaluate a pushed-down null filter (guide §4.4 —
-    # r14 caught the twin ArrowEvalPython running the whole kernel
-    # single-task on the exchange's map side; the kernel is pure, only
-    # the optimizer's licence to copy/reorder it changes)
-    return kernel.asNondeterministic()
-
-
-def minhash_prep_vectorized(
-    k: int = 192, shingle_n: int = 5, seed: int = 42
-) -> Column:
-    """Fused Arrow kernel: ONE pass over each text producing both the
-    MinHash signature (for banding) and the distinct 64-bit shingle-hash
-    set (for exact-Jaccard verification).
-
-    Returns struct{sig: array<bigint>, hs: array<bigint>}.  The 64-bit
-    shingle hash is the verification identity — collision odds per
-    candidate pair ~|A||B|/2^64, so Jaccard over the hash sets equals
-    Jaccard over the string shingle sets; the interpreted-HOF version of
-    the gram table alone cost ~4.5 ms/doc.
-    """
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    coeffs = _perm_coeffs(k, seed)
-
-    @pandas_udf("sig: array<bigint>, hs: array<bigint>")
-    def kernel(texts: pd.Series) -> pd.DataFrame:
-        A = np.array([a for a, _ in coeffs], dtype=np.uint64)[:, None]
-        B = np.array([b for _, b in coeffs], dtype=np.uint64)[:, None]
-        sigs, hsets = [], []
-        for t in texts:
-            if t is None:
-                sigs.append(None)
-                hsets.append(None)
-                continue
-            hs = _np_shingle_hashes(t, shingle_n)
-            sigs.append(_np_minhash_sig(hs, A, B).view(np.int64))
-            hsets.append(hs.view(np.int64))
-        return pd.DataFrame({"sig": sigs, "hs": hsets})
-
-    # non-deterministic: stops the optimizer duplicating the kernel below
-    # a repartition to evaluate a pushed-down null filter (guide §4.4 —
-    # r14 caught the twin ArrowEvalPython running the whole kernel
-    # single-task on the exchange's map side; the kernel is pure, only
-    # the optimizer's licence to copy/reorder it changes)
-    return kernel.asNondeterministic()
-
-
 def minhash_banded_vectorized(
     k: int = 192,
     num_bands: int = 64,
     shingle_n: int = 5,
     seed: int = 42,
 ) -> Column:
-    """Fused kernel variant emitting BAND BUCKETS directly:
-    struct{bk: array<bigint>, hs: array<bigint>} where ``bk[i]`` hashes
-    the i-th row-group of the signature.
+    """The fused MinHash Arrow kernel: ONE numpy pass over each text
+    emitting its LSH band buckets and its shingle-hash set,
+    struct{bk: array<bigint>, hs: array<bigint>}.
 
-    The native banding expression (num_bands structs × concat_ws ×
-    element_at over the signature array) compiles into a very large
-    codegen unit — hashing the band slices inside the numpy kernel keeps
-    the JVM side down to a posexplode.
+    ``bk[i]`` hashes the i-th row-group of the k-permutation Broder
+    signature (hashing the band slices inside the kernel keeps the JVM
+    side down to a posexplode); ``hs`` is the distinct 64-bit shingle
+    hash set, the exact-Jaccard verification identity.
     """
     import numpy as np
     from pyspark.sql.functions import pandas_udf
@@ -520,95 +386,6 @@ def minhash_banded_vectorized(
     # single-task on the exchange's map side; the kernel is pure, only
     # the optimizer's licence to copy/reorder it changes)
     return kernel.asNondeterministic()
-
-
-def minhash_bands(sig: Column, num_bands: int, rows_per_band: int) -> Column:
-    """Banding: array of (band_id, band_hash) structs."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band"),
-                F.xxhash64(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.element_at(sig, i * rows_per_band + r + 1).cast("string")
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                ).alias("bucket"),
-            )
-            for i in range(num_bands)
-        ]
-    )
-
-
-def lsh_candidate_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 32,
-    num_bands: int = 8,
-    shingle_n: int = 5,
-    seed: int = 42,
-    vectorized: bool = True,
-    persist_bands: bool = True,
-) -> DataFrame:
-    """Candidate near-dup pairs (id_a < id_b) from LSH banding.
-
-    Only (id, band, bucket) tuples are shuffled; the self-join is an
-    equi-join on (band, bucket).  Pairs sharing multiple bands are deduped.
-
-    ``vectorized``: numpy Arrow kernel for signatures (default — the HOF
-    expression path is interpreted row-at-a-time); ``persist_bands``:
-    cache the (n_docs × num_bands)-row band table so the self-join reads
-    it once instead of recomputing every signature on both sides.  At a
-    scale where the band table no longer fits the cluster's storage
-    memory, write it to a bucketed table on (band, bucket) instead and
-    the self-join becomes shuffle-free.
-    """
-    rows_per_band = k // num_bands
-    df = _spread(df)
-    if vectorized:
-        sig_kernel = minhash_signature_vectorized(k, shingle_n, seed)
-        signed = df.select(
-            F.col(id_col), sig_kernel(F.col(text_col)).alias("__sig")
-        )
-    else:
-        hashed = df.select(
-            F.col(id_col), shingle_hashes(F.col(text_col), shingle_n).alias("__mh")
-        )
-        signed = hashed.select(
-            F.col(id_col), minhash_from_hashes(F.col("__mh"), k, seed).alias("__sig")
-        )
-    bands = (
-        signed.select(
-            F.col(id_col),
-            F.explode(
-                minhash_bands(F.col("__sig"), num_bands, rows_per_band)
-            ).alias("bb"),
-        )
-        .select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    )
-    if persist_bands:
-        bands = bands.persist()
-    a = bands.withColumnRenamed(id_col, "id_a")
-    bn = bands.withColumnRenamed(id_col, "id_b")
-    return (
-        a.join(bn, ["band", "bucket"], "inner")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-
-def jaccard_shingles(text_a: Column, text_b: Column, shingle_n: int = 5) -> Column:
-    """Exact shingle-set Jaccard between two text columns (verification)."""
-    sa = F.array_distinct(char_ngrams(text_a, shingle_n))
-    sb = F.array_distinct(char_ngrams(text_b, shingle_n))
-    inter = F.size(F.array_intersect(sa, sb)).cast("double")
-    uni = F.size(F.array_union(sa, sb)).cast("double")
-    return F.when(uni > 0, inter / uni).otherwise(F.lit(0.0))
 
 
 # A prep table whose hash-set payload measures below this broadcasts
@@ -650,6 +427,77 @@ def _minhash_prep(
         n = row["n"]
         g_bytes = row["h"] * 16 + row["idb"] + 24 * n
     return p, n, g_bytes
+
+
+def _bands(prep: DataFrame, out_id: str) -> DataFrame:
+    """(out_id, band, bucket) rows of a prep table (id column first)."""
+    return prep.select(
+        F.col(prep.columns[0]).alias(out_id),
+        F.posexplode("__bk").alias("band", "bucket"),
+    )
+
+
+def _lsh_candidates(
+    a: DataFrame,
+    b: DataFrame | None,
+    a_id: str,
+    b_id: str,
+    threshold: float,
+    rows_per_band: int,
+    num_bands: int,
+    miss_tolerance: float,
+    max_bucket: int | None = None,
+    b_docs: int | None = None,
+) -> DataFrame:
+    """THE candidate builder every MinHash entry point shares: band
+    tables ``(id, band, bucket)`` → optional ``max_bucket`` cap → equi-
+    join on (band, bucket) → band-consensus count → pinned-width
+    repartition.  Returns ``(a_id, b_id)``.
+
+    ``b=None`` self-joins ``a`` and keeps each pair once (a_id < b_id).
+    The cap drops (band, bucket) groups of more than ``max_bucket`` b-side
+    rows; a group absent from one side joins nothing, so capping b caps
+    the join.  ``b_docs``: the MEASURED b-side doc count, when known —
+    the b band table (``b_docs × num_bands`` 24-byte tuples) then gets
+    the broadcast hint while it is broadcast-sized, which skips AQE's
+    materialize-both-sides shuffle stage; at corpus scale the hint is
+    withheld and the join shuffles on (band, bucket) as usual.
+    """
+    self_join = b is None
+    if self_join:
+        b = a.withColumnRenamed(a_id, b_id)
+    if max_bucket is not None:
+        small = (
+            b.groupBy("band", "bucket")
+            .agg(F.count("*").alias("__bsz"))
+            .filter(F.col("__bsz") <= max_bucket)
+            .select("band", "bucket")
+        )
+        b = b.join(small, ["band", "bucket"])
+    if b_docs is not None and b_docs * num_bands * 24 < 100 << 20:
+        b = F.broadcast(b)
+    joined = a.join(b, ["band", "bucket"], "inner")
+    if self_join:
+        joined = joined.filter(F.col(a_id) < F.col(b_id))
+    consensus = min_band_matches(
+        threshold, rows_per_band, num_bands, miss_tolerance
+    )
+    return (
+        joined.groupBy(a_id, b_id)  # same shuffle as distinct(), plus the m count
+        .agg(F.count("*").alias("__m"))
+        .filter(F.col("__m") >= consensus)
+        .select(a_id, b_id)
+        # stage break: without it Catalyst fuses agg + consensus filter +
+        # both verification joins + the jaccard math into ONE generated
+        # method that exceeds the JIT/hugeMethodLimit and the whole
+        # pipeline runs interpreted (~100 µs/row over the full agg input).
+        # The exchange carries only the post-consensus pairs (16 B each).
+        # The partition count is pinned: the pair stream is BYTE-small but
+        # CPU-heavy downstream (~85 µs/intersect), and with a bare
+        # repartition AQE coalesces the 3 MB exchange to ONE partition,
+        # serializing verification (15 s single-task vs 2 s at 32-way).
+        .repartition(a.sparkSession.sparkContext.defaultParallelism, a_id)
+    )
 
 
 def _verify_candidates(
@@ -717,6 +565,57 @@ def _verify_candidates(
     )
 
 
+def _verify_and_release(
+    cand: DataFrame,
+    prep_a: DataFrame,
+    prep_b,
+    a_id: str,
+    b_id: str,
+    threshold: float,
+    direct: bool,
+    caches: list[DataFrame],
+) -> DataFrame:
+    """Verify ``cand`` exactly, materialize the verified pairs with
+    ``localCheckpoint`` while the caches are live, then unpersist every
+    cache the entry point made — ``caches`` and ``cand`` — whatever
+    happens.  The result owns no cache and no Python-eval node, so any
+    number of later consumers read the stored pairs instead of re-running
+    the kernel; :func:`free_checkpoint` releases them.
+
+    ``direct=False``: ``cand`` feeds three consumers (two semi-join
+    broadcast builds and the verify join, submitted concurrently on the
+    broadcast thread pool), so it is persisted and materialized BEFORE
+    the fan-out — otherwise each build races the unpopulated cache and
+    recomputes the band join.  ``prep_b`` may be a function of the
+    candidates, for a prep semi-joined to the candidate ids.
+    """
+    try:
+        if not direct:
+            cand = cand.persist()
+            cand.count()
+        if callable(prep_b):
+            prep_b = prep_b(cand)
+        return _verify_candidates(
+            cand, prep_a, prep_b, a_id, b_id, threshold, direct=direct
+        ).localCheckpoint()
+    finally:
+        for c in (cand, *caches):
+            c.unpersist()
+
+
+def free_checkpoint(df: DataFrame) -> None:
+    """Unpersist exactly the RDD a ``localCheckpoint``ed frame scans —
+    its analyzed plan is a ``LogicalRDD`` over the materialized blocks.
+
+    The owner of a checkpoint frees it by identity, so a cache some
+    other caller persisted in the same SparkContext is never touched.
+    A frame that is not a checkpoint scan is left alone.
+    """
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+
+
 def near_dup_pairs_minhash(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -739,10 +638,10 @@ def near_dup_pairs_minhash(
     chance collisions between low-similarity pairs (at sf0.1, 25% of ALL
     doc pairs collide in ≥1 band, but the similarity distribution is
     bimodal: background at j≈0.2, true dups at j≥0.9).  Instead of
-    verifying every collision, require ``m ≥ min_band_matches(threshold,
-    r, b, miss_tolerance)`` matching bands — the binomial consensus floor
-    that misses an exactly-at-threshold pair with probability ≤
-    ``miss_tolerance`` and cuts ~96% of the verification workload.  The
+    verifying every collision, require at least the :func:`min_band_matches`
+    floor of matching bands for (threshold, r, b, miss_tolerance) — the
+    binomial consensus floor that misses an exactly-at-threshold pair with
+    probability ≤ ``miss_tolerance`` and cuts ~96% of verification.  The
     floor never drops below one band, so the banding geometry itself
     bounds recall: an at-threshold pair shares no band with probability
     (1 − t^r)^b.  At the defaults (k=32 in 8 bands of r=4, t=0.7) that is
@@ -756,8 +655,8 @@ def near_dup_pairs_minhash(
     ``localCheckpoint``, and releases the prep (and the candidate cache,
     when one was needed) before returning.  The result's plan is a scan
     of the materialized pairs, so any number of later consumers never
-    re-run the kernel; its blocks are freed when the frame is garbage
-    collected.
+    re-run the kernel; its blocks are freed by :func:`free_checkpoint`,
+    or when the frame is garbage collected.
 
     ``max_bucket``: skip (band, bucket) groups with more than this many
     members before the self-join.  A bucket of d docs emits d²/2 pair
@@ -789,76 +688,22 @@ def near_dup_pairs_minhash(
     prep, n_docs, g_bytes = _minhash_prep(
         df, id_col, text_col, kernel, id_col, persist=True
     )
-
-    bands = prep.select(
-        F.col(id_col), F.posexplode(F.col("__bk")).alias("band", "bucket")
-    )
-    if max_bucket is not None:
-        small_buckets = (
-            bands.groupBy("band", "bucket")
-            .agg(F.count("*").alias("__bsz"))
-            .filter(F.col("__bsz") <= max_bucket)
-            .select("band", "bucket")
-        )
-        bands = bands.join(small_buckets, ["band", "bucket"])
-    a = bands.withColumnRenamed(id_col, "id_a")
-    bn = bands.withColumnRenamed(id_col, "id_b")
-    consensus = min_band_matches(
-        threshold, rows_per_band, num_bands, miss_tolerance
-    )
-    # broadcast the build side only while the band table (n_docs ×
-    # num_bands × 24 B tuples) is broadcast-sized — skips AQE's
-    # materialize-both-sides shuffle stage; at corpus scale the hint is
-    # withheld and the self-join shuffles on (band, bucket) as usual
-    if n_docs * num_bands * 24 < 100 << 20:
-        bn = F.broadcast(bn)
-    cand = (
-        a.join(bn, ["band", "bucket"], "inner")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")  # same shuffle as distinct(), plus the m count
-        .agg(F.count("*").alias("__m"))
-        .filter(F.col("__m") >= consensus)
-        .select("id_a", "id_b")
-        # stage break: without it Catalyst fuses agg + consensus filter +
-        # both verification joins + the jaccard math into ONE generated
-        # method that exceeds the JIT/hugeMethodLimit and the whole
-        # pipeline runs interpreted (~100 µs/row over the full agg input).
-        # The exchange carries only the post-consensus pairs (16 B each).
-        # The partition count is pinned: the pair stream is BYTE-small but
-        # CPU-heavy downstream (~85 µs/intersect), and with a bare
-        # repartition AQE coalesces the 3 MB exchange to ONE partition,
-        # serializing verification (15 s single-task vs 2 s at 32-way).
-        .repartition(
-            df.sparkSession.sparkContext.defaultParallelism, "id_a"
-        )
+    cand = _lsh_candidates(
+        _bands(prep, "id_a"), None, "id_a", "id_b", threshold,
+        rows_per_band, num_bands, miss_tolerance, max_bucket, b_docs=n_docs,
     )
     # measured-direct regime: the whole hash-set table fits the broadcast
     # budget → verification fuses with candidate generation into ONE
     # pipelined job (cand has a single consumer — no materialization
-    # barrier).  Otherwise: persist cand, which then feeds the two
-    # broadcast semi-join builds and the verify join (3 consumers,
-    # submitted concurrently on the broadcast thread pool) — materialize
-    # BEFORE fan-out or each build races the unpopulated cache and
-    # recomputes the band self-join.
-    direct = 2 * g_bytes < _DIRECT_BROADCAST_BYTES
-    # materialize the verified pairs while the caches are live, then
-    # release them: the result owns no cache and no Python-eval node, so
-    # every later consumer (collect, connected components, drop lists)
-    # reads the stored pairs instead of re-running the kernel
-    try:
-        if not direct:
-            cand = cand.persist()
-            cand.count()
-        return _verify_candidates(
-            cand,
-            prep.withColumnRenamed(id_col, "id_a"),
-            prep.withColumnRenamed(id_col, "id_b"),
-            "id_a", "id_b", threshold,
-            direct=direct,
-        ).localCheckpoint()
-    finally:
-        prep.unpersist()
-        cand.unpersist()
+    # barrier)
+    return _verify_and_release(
+        cand,
+        prep.withColumnRenamed(id_col, "id_a"),
+        prep.withColumnRenamed(id_col, "id_b"),
+        "id_a", "id_b", threshold,
+        direct=2 * g_bytes < _DIRECT_BROADCAST_BYTES,
+        caches=[prep],
+    )
 
 
 def fuzzy_join_minhash(
@@ -872,7 +717,6 @@ def fuzzy_join_minhash(
     k: int = 770,
     num_bands: int = 154,
     shingle_n: int = 5,
-    persist: bool = True,
     miss_tolerance: float = 1e-4,
 ) -> DataFrame:
     """Fuzzy JOIN between two corpora: pairs (left, right) with exact
@@ -885,7 +729,9 @@ def fuzzy_join_minhash(
     tables equi-join on (band, bucket) — 24-byte tuples, shuffled on the
     bucket key — and the binomial band-consensus floor plus exact
     verification make the result identical to the O(|L|·|R|) oracle.
-    Returns ``(id_l, id_r, jaccard)``.
+    Returns ``(id_l, id_r, jaccard)`` materialized: both preps and the
+    candidate cache are released before returning, and the result's plan
+    is a scan of the ``localCheckpoint``ed pairs (:func:`free_checkpoint`).
 
     At 100 TB: same profile as the self-join path — only (id, band,
     bucket) shuffles for candidate generation; verification broadcasts
@@ -903,50 +749,22 @@ def fuzzy_join_minhash(
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         fut_l = pool.submit(
-            _minhash_prep, left, left_id, left_text, kernel, "id_l", persist
+            _minhash_prep, left, left_id, left_text, kernel, "id_l", True
         )
         fut_r = pool.submit(
-            _minhash_prep, right, right_id, right_text, kernel, "id_r", persist
+            _minhash_prep, right, right_id, right_text, kernel, "id_r", True
         )
         prep_l, _, gb_l = fut_l.result()
         prep_r, n_r, gb_r = fut_r.result()
 
-    bands_l = prep_l.select(
-        "id_l", F.posexplode("__bk").alias("band", "bucket")
+    cand = _lsh_candidates(
+        _bands(prep_l, "id_l"), _bands(prep_r, "id_r"), "id_l", "id_r",
+        threshold, k // num_bands, num_bands, miss_tolerance, b_docs=n_r,
     )
-    bands_r = prep_r.select(
-        "id_r", F.posexplode("__bk").alias("band", "bucket")
-    )
-    if n_r is not None and n_r * num_bands * 24 < 100 << 20:
-        bands_r = F.broadcast(bands_r)
-    consensus = min_band_matches(
-        threshold, k // num_bands, num_bands, miss_tolerance
-    )
-    cand = (
-        bands_l.join(bands_r, ["band", "bucket"], "inner")
-        .groupBy("id_l", "id_r")
-        .agg(F.count("*").alias("__m"))
-        .filter(F.col("__m") >= consensus)
-        .select("id_l", "id_r")
-        # pinned-width stage break for the CPU-heavy verify (see
-        # near_dup_pairs_minhash for why AQE must not coalesce this)
-        .repartition(
-            left.sparkSession.sparkContext.defaultParallelism, "id_l"
-        )
-    )
-    # measured-direct regime (see near_dup_pairs_minhash): both hash-set
-    # tables under the broadcast budget -> one pipelined job; otherwise
-    # persist cand before the 3-consumer fan-out
-    direct = (
-        gb_l is not None
-        and gb_r is not None
-        and 2 * (gb_l + gb_r) < _DIRECT_BROADCAST_BYTES
-    )
-    if persist and not direct:
-        cand = cand.persist()
-        cand.count()
-    return _verify_candidates(
-        cand, prep_l, prep_r, "id_l", "id_r", threshold, direct=direct
+    return _verify_and_release(
+        cand, prep_l, prep_r, "id_l", "id_r", threshold,
+        direct=2 * (gb_l + gb_r) < _DIRECT_BROADCAST_BYTES,
+        caches=[prep_l, prep_r],
     )
 
 
@@ -962,7 +780,6 @@ def fuzzy_join_band_store(
     *,
     max_bucket: int | None = None,
     miss_tolerance: float = 1e-4,
-    persist: bool = True,
 ) -> DataFrame:
     """:func:`fuzzy_join_minhash` with the RIGHT side read from a
     persisted bucketed band table (:func:`write_band_table`) instead of
@@ -979,56 +796,38 @@ def fuzzy_join_band_store(
 
     ``store_corpus`` is probed ONLY for candidate ids (semi join before
     the text re-hash), so verification cost is O(candidates), never
-    O(store).  Returns ``(id_l, id_r, jaccard)`` like the inline path.
+    O(store).  Returns ``(id_l, id_r, jaccard)`` materialized like the
+    inline path: the batch prep and the candidate cache are released, and
+    the plan is a scan of the ``localCheckpoint``ed pairs.
     """
     spark = batch.sparkSession
     prow = spark.table(f"{band_table}__params").first()
     k, num_bands, shingle_n = prow["k"], prow["num_bands"], prow["shingle_n"]
     kernel = minhash_banded_vectorized(k, num_bands, shingle_n)
-
-    prep_l, _, gb_l = _minhash_prep(
-        batch, batch_id_col, batch_text_col, kernel, "id_l", persist
-    )
-    bands_l = prep_l.select(
-        "id_l", F.posexplode("__bk").alias("band", "bucket")
-    )
     bands_r = spark.table(band_table).withColumnRenamed(store_id_col, "id_r")
-    if max_bucket is not None:
-        small = (
-            bands_r.groupBy("band", "bucket")
-            .agg(F.count("*").alias("__bsz"))
-            .filter(F.col("__bsz") <= max_bucket)
-            .select("band", "bucket")
-        )
-        bands_r = bands_r.join(small, ["band", "bucket"])
-    consensus = min_band_matches(
-        threshold, k // num_bands, num_bands, miss_tolerance
+
+    prep_l, _, _ = _minhash_prep(
+        batch, batch_id_col, batch_text_col, kernel, "id_l", True
     )
-    cand = (
-        bands_l.join(bands_r, ["band", "bucket"], "inner")
-        .groupBy("id_l", "id_r")
-        .agg(F.count("*").alias("__m"))
-        .filter(F.col("__m") >= consensus)
-        .select("id_l", "id_r")
-        .repartition(spark.sparkContext.defaultParallelism, "id_l")
-    )
-    if persist:
-        # cand feeds three consumers in the verify (ga ids, gb ids, the
-        # pair join) — materialize once
-        cand = cand.persist()
-        cand.count()
-    # hash sets for ONLY the candidate store rows: candidate ids are
-    # small by construction (consensus-filtered), the store is not
-    store_sub = store_corpus.withColumnRenamed(store_id_col, "id_r").join(
-        F.broadcast(cand.select("id_r").distinct()), "id_r", "left_semi"
-    )
-    prep_r, _, _ = _minhash_prep(
-        store_sub, "id_r", store_text_col, kernel, "id_r", False
-    )
-    return _verify_candidates(
-        cand, prep_l, prep_r, "id_l", "id_r", threshold, direct=False
+    cand = _lsh_candidates(
+        _bands(prep_l, "id_l"), bands_r, "id_l", "id_r", threshold,
+        k // num_bands, num_bands, miss_tolerance, max_bucket,
     )
 
+    def store_prep(cand: DataFrame) -> DataFrame:
+        # hash sets for ONLY the candidate store rows: candidate ids are
+        # small by construction (consensus-filtered), the store is not
+        store_sub = store_corpus.withColumnRenamed(store_id_col, "id_r").join(
+            F.broadcast(cand.select("id_r").distinct()), "id_r", "left_semi"
+        )
+        return _minhash_prep(
+            store_sub, "id_r", store_text_col, kernel, "id_r", False
+        )[0]
+
+    return _verify_and_release(
+        cand, prep_l, store_prep, "id_l", "id_r", threshold,
+        direct=False, caches=[prep_l],
+    )
 
 # --- SimHash ---------------------------------------------------------------
 def simhash64(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -1612,16 +1411,10 @@ def write_band_table(
                 "silently collapse recall"
             )
     kernel = minhash_banded_vectorized(k, num_bands, shingle_n)
-    bands = (
-        _spread(df)
-        .select(F.col(id_col), kernel(F.col(text_col)).alias("__p"))
-        .select(
-            F.col(id_col),
-            F.posexplode(F.col("__p.bk")).alias("band", "bucket"),
-        )
-    )
+    prep, _, _ = _minhash_prep(df, id_col, text_col, kernel, id_col, False)
     write_bucketed(
-        bands, table, ["band", "bucket"], num_buckets=num_buckets, mode=mode
+        _bands(prep, id_col), table, ["band", "bucket"],
+        num_buckets=num_buckets, mode=mode,
     )
     if mode == "append":
         return
@@ -1684,27 +1477,10 @@ def candidate_pairs_from_band_table(
             rows_per_band = prow["k"] // num_bands
         else:
             num_bands = prow["k"] // rows_per_band
-    bands = spark.table(table)
-    if max_bucket is not None:
-        small = (
-            bands.groupBy("band", "bucket")
-            .agg(F.count("*").alias("__bsz"))
-            .filter(F.col("__bsz") <= max_bucket)
-            .select("band", "bucket")
-        )
-        bands = bands.join(small, ["band", "bucket"])
-    a = bands.withColumnRenamed(id_col, "id_a")
-    b = bands.withColumnRenamed(id_col, "id_b")
-    consensus = min_band_matches(
-        threshold, rows_per_band, num_bands, miss_tolerance
-    )
-    return (
-        a.join(b, ["band", "bucket"], "inner")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("__m"))
-        .filter(F.col("__m") >= consensus)
-        .select("id_a", "id_b")
+    return _lsh_candidates(
+        spark.table(table).withColumnRenamed(id_col, "id_a"), None,
+        "id_a", "id_b", threshold, rows_per_band, num_bands,
+        miss_tolerance, max_bucket,
     )
 
 

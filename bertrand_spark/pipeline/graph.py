@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import free_checkpoint
+
 __all__ = ["connected_components", "cluster_labels", "dedup_keep_canonical"]
 
 
@@ -84,7 +86,6 @@ def connected_components(
     sits in executor storage until driver GC, which on a big edge set
     multiplies storage by the round count.
     """
-    sc = edges.sparkSession.sparkContext
     spark = edges.sparkSession
 
     def _local_finish(canon_df: DataFrame, pdf=None) -> DataFrame:
@@ -127,47 +128,10 @@ def connected_components(
             [(n, find(n)) for n in sorted(nodes)], schema
         )
 
-    def _persisted_ids():
-        jmap = sc._jsc.getPersistentRDDs()
-        out = set()
-        it = jmap.keySet().iterator()
-        while it.hasNext():
-            out.add(it.next())
-        return out
-
-    def _free(ids):
-        for i in ids:
-            try:
-                rdd = sc._jsc.getPersistentRDDs().get(i)
-                if rdd is not None:
-                    rdd.unpersist()
-            except Exception:
-                pass  # best-effort: leaked blocks only cost memory
-
-    def _ckpt(df, prev_ids):
-        """localCheckpoint df; free the superseded round's blocks (safe:
-        nothing references them once the new checkpoint is materialized).
-
-        Ownership is claimed ONLY when exactly one new persistent RDD
-        appeared during the (eager) checkpoint call — if the job also
-        materialized caller caches (possible on the FIRST action, when
-        upstream persists are still unpopulated) or a concurrent thread
-        persisted something, the diff is ambiguous and we free nothing
-        (a bounded leak beats unpersisting someone else's blocks).
-        """
-        before = _persisted_ids()
-        out = df.localCheckpoint()
-        mine = list(_persisted_ids() - before)
-        if len(mine) != 1:
-            mine = []
-        _free(prev_ids)
-        return out, mine
-
-    # round 0 is the first action on the input lineage: when upstream
-    # caches materialize inside it the diff holds several new ids and
-    # _ckpt claims none (a bounded leak); materialized input (e.g.
-    # near_dup_pairs_minhash's checkpointed pairs) leaves exactly one
-    canon, ckpt_ids = _ckpt(_canonical(edges, src, dst), [])
+    # round 0 checkpoints the input edges; every round frees exactly its
+    # predecessor's checkpoint (safe: nothing references it once the new
+    # one is materialized), never an upstream cache materialized inside it
+    canon = _canonical(edges, src, dst).localCheckpoint()
 
     def _fingerprint(e: DataFrame):
         # bit_xor, not sum: order-insensitive AND overflow-free under ANSI
@@ -196,7 +160,7 @@ def connected_components(
         )
         if len(probe) <= local_threshold:
             out = _local_finish(canon, pdf=probe)
-            _free(ckpt_ids)
+            free_checkpoint(canon)
             return out
         del probe
 
@@ -209,7 +173,7 @@ def connected_components(
             # each per-micro-batch call (e.g. cluster_labels) leaks one
             # checkpointed edge set into executor storage until GC.
             out = _local_finish(canon)
-            _free(ckpt_ids)
+            free_checkpoint(canon)
             return out
         # large-star: every canonical edge (hi, lo), seen from its smaller
         # endpoint lo, re-attaches hi to m(lo) = min(Γ(lo) ∪ {lo}).
@@ -239,9 +203,9 @@ def connected_components(
             .filter(F.col("lo") != F.col("m"))
             .select(F.col("lo").alias("hi"), F.col("m").alias("lo"))
         )
-        canon, ckpt_ids = _ckpt(
-            part_center.union(part_small).distinct(), ckpt_ids
-        )
+        prev_canon = canon
+        canon = part_center.union(part_small).distinct().localCheckpoint()
+        free_checkpoint(prev_canon)
 
         cur = _fingerprint(canon)
         if cur == prev:

@@ -437,7 +437,6 @@ def stream_fuzzy_dedup(
     k: int = 770,
     num_bands: int = 154,
     shingle_n: int = 5,
-    unpersist_caches: bool = True,
     band_table: str | None = None,
 ):
     """Streaming NEAR-duplicate dedup against a historical corpus: a
@@ -445,17 +444,10 @@ def stream_fuzzy_dedup(
     documents against the static store (two-table MinHash LSH, exact
     Jaccard verified), drops batch rows with a match ≥ ``threshold``,
     and lands the kept rows in the idempotent per-epoch parquet sink.
-
-    ``unpersist_caches`` (default on): after each epoch's write, free
-    every RDD persisted DURING the epoch — the fuzzy join's prep/cand
-    caches are epoch-scoped and would otherwise grow executor storage
-    without bound on a long-running stream.  The diff-based ownership
-    assumes this stream is the only thing persisting in the
-    SparkContext while an epoch runs; if OTHER queries/threads share
-    the session and persist concurrently, pass ``unpersist_caches=
-    False`` (their caches must not be freed from under them — the same
-    ambiguity rule ``graph.py``'s checkpoint cleanup follows) and
-    recycle the session periodically instead.
+    The fuzzy join releases its own caches; after each epoch's write
+    the handler frees the join's checkpointed pairs, so executor storage
+    does not grow on a long-running stream and no other cache in the
+    session (the caller's ``store`` included) is ever touched.
 
     The fuzzy sibling of :func:`stream_dedup_against_store` (which is
     exact-fingerprint only): a re-crawled page with a new timestamp or
@@ -476,58 +468,44 @@ def stream_fuzzy_dedup(
     ``shingle_n`` arguments are ignored in this mode so the batch
     kernel can never drift from the store's banding.
     """
-    from ..pipeline.dedup import fuzzy_join_band_store, fuzzy_join_minhash
+    from ..pipeline.dedup import (
+        free_checkpoint, fuzzy_join_band_store, fuzzy_join_minhash,
+    )
 
     sink = foreach_batch_parquet_sink(out_dir)
 
     def dedup(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        sc = batch_df.sparkSession.sparkContext
-        # fuzzy_join_minhash persists its prep/cand tables (load-bearing
-        # for the multi-consumer fan-out) — epoch-scoped caches freed
-        # after the write (see unpersist_caches docstring for the
-        # single-writer ownership assumption)
-        before = (
-            set(sc._jsc.getPersistentRDDs().keySet().toArray())
-            if unpersist_caches
-            else None
-        )
+        if band_table is not None:
+            pairs = fuzzy_join_band_store(
+                batch_df,
+                band_table,
+                store,
+                batch_id_col=id_col,
+                batch_text_col=text_col,
+                store_id_col=id_col,
+                store_text_col=text_col,
+                threshold=threshold,
+            )
+        else:
+            pairs = fuzzy_join_minhash(
+                batch_df,
+                store,
+                left_id=id_col,
+                right_id=id_col,
+                left_text=text_col,
+                right_text=text_col,
+                threshold=threshold,
+                k=k,
+                num_bands=num_bands,
+                shingle_n=shingle_n,
+            )
         try:
-            if band_table is not None:
-                pairs = fuzzy_join_band_store(
-                    batch_df,
-                    band_table,
-                    store,
-                    batch_id_col=id_col,
-                    batch_text_col=text_col,
-                    store_id_col=id_col,
-                    store_text_col=text_col,
-                    threshold=threshold,
-                )
-            else:
-                pairs = fuzzy_join_minhash(
-                    batch_df,
-                    store,
-                    left_id=id_col,
-                    right_id=id_col,
-                    left_text=text_col,
-                    right_text=text_col,
-                    threshold=threshold,
-                    k=k,
-                    num_bands=num_bands,
-                    shingle_n=shingle_n,
-                )
             hits = pairs.select(F.col("id_l").alias(id_col)).distinct()
-            kept = batch_df.join(hits, id_col, "left_anti")
-            sink(kept, batch_id)
+            sink(batch_df.join(hits, id_col, "left_anti"), batch_id)
         finally:
-            if before is not None:
-                jmap = sc._jsc.getPersistentRDDs()
-                for rid in set(jmap.keySet().toArray()) - before:
-                    rdd = jmap.get(rid)
-                    if rdd is not None:
-                        rdd.unpersist()
+            free_checkpoint(pairs)
 
     return dedup
 

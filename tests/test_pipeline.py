@@ -84,11 +84,6 @@ class TestDedup:
         groups = D.exact_dup_groups(df, "text").collect()
         assert len(groups) == 1 and groups[0]["n"] == 2
 
-    def test_minhash_signature_shape(self, spark):
-        df = spark.createDataFrame([("the quick brown fox jumps",)], ["text"])
-        sig = df.select(D.minhash_signature(F.col("text"), 16).alias("s")).collect()[0]["s"]
-        assert len(sig) == 16 and all(isinstance(x, int) for x in sig)
-
     def test_minhash_near_dup(self, spark):
         base = "the quick brown fox jumps over the lazy dog again and again ok"
         df = spark.createDataFrame(
@@ -100,27 +95,55 @@ class TestDedup:
         assert (1, 2) in ids
         assert all(3 not in p for p in ids)
 
-    @pytest.mark.parametrize("persist", [True, False])
-    @pytest.mark.parametrize("semi_join", [False, True], ids=["direct", "semi"])
+    @pytest.mark.parametrize(
+        "entry,semi_join,persist",
+        [
+            pytest.param("self", False, True, id="direct-True"),
+            pytest.param("self", False, False, id="direct-False"),
+            pytest.param("self", True, True, id="semi-True"),
+            pytest.param("self", True, False, id="semi-False"),
+            pytest.param("fuzzy", False, None, id="fuzzy-direct"),
+            pytest.param("fuzzy", True, None, id="fuzzy-semi"),
+            pytest.param("band_store", True, None, id="band_store"),
+        ],
+    )
     def test_minhash_pairs_materialized_once(
-        self, spark, docs, persist, semi_join, monkeypatch
+        self, spark, docs, entry, semi_join, persist, monkeypatch
     ):
-        """The kernel runs once per call whatever ``persist`` says: the
-        result is a scan of materialized pairs (no Python-eval node left
-        to re-run), the call leaves exactly one new persisted RDD — the
-        one backing the result — and the pairs equal the exact
-        shingle-Jaccard pairs."""
+        """Every MinHash entry point runs its kernel once per call (for
+        ``near_dup_pairs_minhash``, whatever ``persist`` says): the result
+        is a scan of materialized pairs (no Python-eval node left to
+        re-run), the call leaves exactly one new persisted RDD — the one
+        backing the result — and the pairs equal the exact shingle-Jaccard
+        pairs (all pairs for the self-join, even × odd ids for the two
+        fuzzy joins)."""
         if semi_join:  # a zero budget forces the persisted-candidate path
             monkeypatch.setattr(D, "_DIRECT_BROADCAST_BYTES", 0)
+        even = docs.filter(F.col("doc_id") % 2 == 0)
+        odd = docs.filter(F.col("doc_id") % 2 == 1)
+        if entry == "band_store":
+            spark.sql("DROP TABLE IF EXISTS t_band_materialized")
+            D.write_band_table(odd, "t_band_materialized", num_buckets=4)
         before = _persisted_rdd_ids(spark)
-        pairs = D.near_dup_pairs_minhash(
-            docs, threshold=0.6, k=770, num_bands=154, persist=persist
-        )
-        new_ids = _persisted_rdd_ids(spark) - before
-        qe = pairs._jdf.queryExecution()
-        assert len(new_ids) == 1 and qe.analyzed().nodeName() == "LogicalRDD"
-        assert new_ids == {qe.analyzed().rdd().id()}
-        got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
+        try:
+            if entry == "self":
+                pairs = D.near_dup_pairs_minhash(
+                    docs, threshold=0.6, k=770, num_bands=154, persist=persist
+                )
+            elif entry == "fuzzy":
+                pairs = D.fuzzy_join_minhash(even, odd, threshold=0.6)
+            else:
+                pairs = D.fuzzy_join_band_store(
+                    even, "t_band_materialized", odd, threshold=0.6
+                )
+            new_ids = _persisted_rdd_ids(spark) - before
+            qe = pairs._jdf.queryExecution()
+            assert len(new_ids) == 1 and qe.analyzed().nodeName() == "LogicalRDD"
+            assert new_ids == {qe.analyzed().rdd().id()}
+            got = {tuple(r)[:2] for r in pairs.collect()}
+        finally:
+            spark.sql("DROP TABLE IF EXISTS t_band_materialized")
+            spark.sql("DROP TABLE IF EXISTS t_band_materialized__params")
         plan = qe.executedPlan().toString()
         for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
             assert node not in plan
@@ -131,14 +154,18 @@ class TestDedup:
             ).collect()
         )
         exact = {
-            (ia, ib)
+            (ia, ib) if entry == "self" or ia % 2 == 0 else (ib, ia)
             for i, (ia, ga) in enumerate(grams)
             for ib, gb in grams[i + 1:]
-            if len(ga & gb) / len(ga | gb) >= 0.6
+            if (entry == "self" or (ia + ib) % 2 == 1)
+            and len(ga & gb) / len(ga | gb) >= 0.6
         }
         assert got == exact and got
 
     def test_dedup_keep_canonical_frees_round0_checkpoint(self, spark, docs):
+        """Round 0's checkpoint is freed whether the input pairs are
+        already materialized or an upstream cache first materializes
+        inside round 0; the caller's cache survives."""
         from bertrand_spark.pipeline.graph import dedup_keep_canonical
 
         pairs = D.near_dup_pairs_minhash(
@@ -147,6 +174,17 @@ class TestDedup:
         before = _persisted_rdd_ids(spark)
         dedup_keep_canonical(docs, pairs).collect()
         assert _persisted_rdd_ids(spark) - before == set()
+
+        cached = pairs.select("id_a", "id_b").persist()  # not yet materialized
+        try:
+            before = _persisted_rdd_ids(spark)
+            dedup_keep_canonical(docs, cached).collect()
+            rel = cached._jdf.queryExecution().withCachedData()
+            assert rel.nodeName() == "InMemoryRelation"
+            cache_id = rel.cacheBuilder().cachedColumnBuffers().id()
+            assert _persisted_rdd_ids(spark) - before == {cache_id}
+        finally:
+            cached.unpersist()
 
     def test_minhash_warns_when_bands_miss_tolerance(self, spark):
         import warnings

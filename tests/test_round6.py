@@ -316,23 +316,31 @@ class TestFuzzyJoinBandStore:
         }
         assert got == want and len(got) >= 3  # the 3 planted near-dups
 
-    def test_candidate_join_store_side_has_no_exchange(self, spark, corpus):
-        from bertrand_spark.pipeline.dedup import fuzzy_join_band_store
+    def test_candidate_join_store_side_has_no_exchange(
+        self, spark, corpus, monkeypatch
+    ):
+        from bertrand_spark.pipeline import dedup as D
 
         store, batch = corpus
+        # the returned pairs are a checkpoint scan: inspect the candidate
+        # frame the shared LSH core builds for these inputs instead
+        built = []
+        core = D._lsh_candidates
+
+        def spy(*args, **kwargs):
+            built.append(core(*args, **kwargs))
+            return built[-1]
+
+        monkeypatch.setattr(D, "_lsh_candidates", spy)
         old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         try:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            out = fuzzy_join_band_store(
-                batch, "t_band_r6", store, threshold=0.6, persist=False
-            )
-            jplan = out._jdf.queryExecution().executedPlan()
+            D.fuzzy_join_band_store(batch, "t_band_r6", store, threshold=0.6)
+            (cand,) = built
+            jplan = cand._jdf.queryExecution().executedPlan()
             if jplan.nodeName() == "AdaptiveSparkPlan":
                 jplan = jplan.initialPlan()
-            # the CANDIDATE join is the one keyed on (band, bucket) —
-            # the later verify joins also reference the table's scans
-            # (and use intentional candidate-sized broadcasts), so
-            # select by join key, not by subtree content
+            # the CANDIDATE join is the one keyed on (band, bucket)
             cand_join = next(
                 n
                 for n in _walk_jplan(jplan)

@@ -252,3 +252,59 @@ class TestStreamFuzzyDedup:
         got = {r["doc_id"] for r in spark.read.parquet(out).collect()}
         assert got == expected_kept
         store.unpersist()
+
+    def test_caller_store_cache_survives_epochs(self, spark, sf_dir, tmp_path):
+        """The store's cache is first materialized inside epoch 0; the
+        handler frees only its own epoch state, never the caller's cache."""
+        from bertrand_spark.pipeline.dedup import fuzzy_join_minhash
+        from bertrand_spark.streaming import stream_fuzzy_dedup
+
+        def persisted():
+            return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+        docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
+        store = docs.filter(F.col("doc_id") % 2 == 0).persist()
+        # near-copies of two store docs, built from a plan the store's
+        # cache does not match, so nothing materializes it before the run
+        near = docs.filter(F.col("doc_id").isin(0, 2)).select(
+            (F.col("doc_id") + 100_000).alias("doc_id"),
+            F.concat(F.col("text"), F.lit(" tail")).alias("text"),
+        )
+        stream_src = docs.filter(F.col("doc_id") % 2 == 1).unionByName(near)
+        qdir = str(tmp_path / "in")
+        stream_src.repartition(2).write.parquet(qdir)
+        before = persisted()
+        try:
+            stream = (
+                spark.readStream.schema(stream_src.schema)
+                .option("maxFilesPerTrigger", "1")
+                .parquet(qdir)
+            )
+            out = str(tmp_path / "kept")
+            q = (
+                stream.writeStream.foreachBatch(
+                    stream_fuzzy_dedup(store, out, threshold=0.7)
+                )
+                .option("checkpointLocation", str(tmp_path / "ckpt"))
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination(300)
+            left = persisted() - before
+
+            hits = {
+                r["id_l"]
+                for r in fuzzy_join_minhash(
+                    stream_src, store, threshold=0.7
+                ).collect()
+            }
+            assert {r["doc_id"] for r in near.collect()} <= hits
+            want = {r["doc_id"] for r in stream_src.collect()} - hits
+            got = {r["doc_id"] for r in spark.read.parquet(out).collect()}
+            assert got == want
+
+            rel = store._jdf.queryExecution().withCachedData()
+            assert rel.nodeName() == "InMemoryRelation"
+            assert left == {rel.cacheBuilder().cachedColumnBuffers().id()}
+        finally:
+            store.unpersist()
